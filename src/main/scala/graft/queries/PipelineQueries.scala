@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Compaction, Decontam, Dedup, TextSearch, TopK}
-import graft.sources.Tables
+import graft.sources.{Artifacts, Tables}
 
 /** Training-data pipeline queries beyond SURVEY §2's original inventory:
   * CDC compaction, deterministic sampling, PII scrubbing, BM25 retrieval,
@@ -1209,27 +1209,14 @@ object PipelineQueries {
     * estimated path. */
   private def corpusIncrementalArtifacts(s: SparkSession, d: String,
       cut: Long): java.nio.file.Path = {
-    import java.nio.file.{Files, Paths}
     import graft.operators.{Dedup, IncrementalDedup}
-    val tag = new java.io.File(d).getCanonicalPath
     // v2 (r15): also persists qmeta (per-doc quality metadata +
     // digest) and s3ids — the membership frames a RETRACTION against
     // this at-rest state needs (keeper re-election is digest-local
     // only with the per-doc mapping)
-    val keySrc = s"corpus-incr|$tag|cut=$cut|j=0.6|h=32b8|v2"
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(keySrc.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val dir = Paths.get(graft.sources.Artifacts.cacheDir, key)
-    val marker = dir.resolve("_built")
     val docs = Tables.documents(s, d)
-    val fpRow = docs.agg(count(lit(1)),
-      bit_xor(xxhash64(col("doc_id")))).head()
-    val fp = s"${fpRow.getLong(0)}:${if (fpRow.isNullAt(1)) 0L
-      else fpRow.getLong(1)}"
-    val fresh = Files.exists(marker) &&
-      new String(Files.readAllBytes(marker), "UTF-8").trim == fp &&
-      !sys.env.get("GRAFT_INDEX_REBUILD").contains("1")
-    if (!fresh) {
+    Artifacts.buildOnce("corpus_incr", s"cut=$cut|j=0.6|h=32b8|v2", d,
+        docs, "doc_id") { dir =>
       graft.functions.GraftFunctions.register(s)
       val day1 = docs.filter(col("doc_id") < cut)
       val q1 = qualityGate(day1).cache()
@@ -1251,24 +1238,20 @@ object PipelineQueries {
         .select("doc_id").distinct()
       val s4 = s3.filter(col("doc_id") >= 5)
         .join(cont1, Seq("doc_id"), "left_anti")
-      s4.select("doc_id", "lang", "n_tokens").write.mode("overwrite")
+      s4.select("doc_id", "lang", "n_tokens").write
         .parquet(dir.resolve("s4meta").toString)
       q1.select(sha2(col("text"), 256).as("digest")).distinct()
-        .write.mode("overwrite").parquet(dir.resolve("digests").toString)
+        .write.parquet(dir.resolve("digests").toString)
       q1.select(col("doc_id"), col("lang"), col("n_tokens"),
           sha2(col("text"), 256).as("digest"))
-        .write.mode("overwrite").parquet(dir.resolve("qmeta").toString)
-      s3.select("doc_id").write.mode("overwrite")
-        .parquet(dir.resolve("s3ids").toString)
+        .write.parquet(dir.resolve("qmeta").toString)
+      s3.select("doc_id").write.parquet(dir.resolve("s3ids").toString)
       IncrementalDedup.writeIndex(
         IncrementalDedup.signatures(s2, "doc_id", "text"),
         dir.resolve("sigindex").toString)
-      benchGrams.write.mode("overwrite")
-        .parquet(dir.resolve("benchgrams").toString)
+      benchGrams.write.parquet(dir.resolve("benchgrams").toString)
       q1.unpersist()
-      Files.write(marker, fp.getBytes("UTF-8")) // commit point
     }
-    dir
   }
 
   /** The day-1/day-2 id cut of the incremental gate: the last third of
@@ -1422,23 +1405,10 @@ object PipelineQueries {
     *  - `benchgrams` — static decontam probe set (day-1's). */
   private def corpusDay3Artifacts(s: SparkSession, d: String,
       c1: Long, c2: Long): java.nio.file.Path = {
-    import java.nio.file.{Files, Paths}
     import graft.operators.IncrementalDedup
-    val tag = new java.io.File(d).getCanonicalPath
-    val keySrc = s"corpus-day3|$tag|c1=$c1|c2=$c2|j=0.6|h=32b8|v2"
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(keySrc.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val dir = Paths.get(graft.sources.Artifacts.cacheDir, key)
-    val marker = dir.resolve("_built")
     val docs = Tables.documents(s, d)
-    val fpRow = docs.agg(count(lit(1)),
-      bit_xor(xxhash64(col("doc_id")))).head()
-    val fp = s"${fpRow.getLong(0)}:${if (fpRow.isNullAt(1)) 0L
-      else fpRow.getLong(1)}"
-    val fresh = Files.exists(marker) &&
-      new String(Files.readAllBytes(marker), "UTF-8").trim == fp &&
-      !sys.env.get("GRAFT_INDEX_REBUILD").contains("1")
-    if (!fresh) {
+    Artifacts.buildOnce("corpus_day3", s"c1=$c1|c2=$c2|j=0.6|h=32b8|v2",
+        d, docs, "doc_id") { dir =>
       graft.functions.GraftFunctions.register(s)
       val day1 = corpusIncrementalArtifacts(s, d, c1)
       val digests1 = s.read.parquet(day1.resolve("digests").toString)
@@ -1456,26 +1426,22 @@ object PipelineQueries {
       // compacted state has its membership frames — the lifecycle
       // gate's input)
       s.read.parquet(day1.resolve("s4meta").toString).unionAll(d2.s4)
-        .write.mode("overwrite").parquet(dir.resolve("s4meta12").toString)
+        .write.parquet(dir.resolve("s4meta12").toString)
       digests1.unionAll(d2.qmeta.select("digest")).distinct()
-        .write.mode("overwrite")
-        .parquet(dir.resolve("digests12").toString)
+        .write.parquet(dir.resolve("digests12").toString)
       s.read.parquet(day1.resolve("qmeta").toString).unionAll(d2.qmeta)
-        .write.mode("overwrite").parquet(dir.resolve("qmeta12").toString)
+        .write.parquet(dir.resolve("qmeta12").toString)
       s.read.parquet(day1.resolve("s3ids").toString)
         .unionAll(d2.s3)
-        .write.mode("overwrite").parquet(dir.resolve("s3ids12").toString)
+        .write.parquet(dir.resolve("s3ids12").toString)
       val sigs12 = sigs1.unionAll(
         IncrementalDedup.signatures(d2.s2, "doc_id", "text"))
       IncrementalDedup.writeIndex(sigs12, dir.resolve("sigs12").toString)
       IncrementalDedup.writeBandedIndex(
         s.read.parquet(dir.resolve("sigs12").toString),
         dir.resolve("banded12").toString)
-      benchGrams.write.mode("overwrite")
-        .parquet(dir.resolve("benchgrams").toString)
-      Files.write(marker, fp.getBytes("UTF-8")) // commit point
+      benchGrams.write.parquet(dir.resolve("benchgrams").toString)
     }
-    dir
   }
 
   private def day3Cuts(docs: DataFrame): (Long, Long) = {
@@ -1551,48 +1517,27 @@ object PipelineQueries {
     * so artifact state and batch chain can never drift. */
   private def corpusRetractArtifacts(s: SparkSession, d: String)
       : java.nio.file.Path = {
-    import java.nio.file.{Files, Paths}
-    val tag = new java.io.File(d).getCanonicalPath
     // v2 (r16): also persists the band-partitioned S2 signature index —
     // the amendment's fresh-pair candidate probe (delta-sized, vs a
     // full corpus text scan)
-    val keySrc = s"corpus-retract|$tag|j=0.6|h=32b8|v2"
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(keySrc.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val dir = Paths.get(graft.sources.Artifacts.cacheDir, key)
-    val marker = dir.resolve("_built")
     val docs = Tables.documents(s, d)
-    val fpRow = docs.agg(count(lit(1)),
-      bit_xor(xxhash64(col("doc_id")))).head()
-    val fp = s"${fpRow.getLong(0)}:${if (fpRow.isNullAt(1)) 0L
-      else fpRow.getLong(1)}"
-    // reachable from concurrent driver threads since r17 (the
-    // streamAmendFull one-shot future races streamAmendRun on a cold
-    // artifact cache): serialize the check-then-build per key, and
-    // RE-CHECK freshness inside the lock so the loser becomes a no-op
-    graft.sources.Artifacts.withBuildLock(key) {
-    val fresh = Files.exists(marker) &&
-      new String(Files.readAllBytes(marker), "UTF-8").trim == fp &&
-      !sys.env.get("GRAFT_INDEX_REBUILD").contains("1")
-    if (!fresh) {
+    Artifacts.buildOnce("corpus_retract", "j=0.6|h=32b8|v2", d, docs,
+        "doc_id") { dir =>
       graft.functions.GraftFunctions.register(s)
       val st = corpusStages(docs, Some(DedupQueries.verifiedPairs(s, d)))
       st.quality
         .select(col("doc_id"), col("lang"), col("n_tokens"),
           sha2(col("text"), 256).as("digest"))
-        .write.mode("overwrite").parquet(dir.resolve("qmeta").toString)
-      st.s2.select("doc_id").write.mode("overwrite")
-        .parquet(dir.resolve("s2ids").toString)
-      st.s3.select("doc_id").write.mode("overwrite")
-        .parquet(dir.resolve("s3ids").toString)
-      st.s4.select("doc_id", "lang", "n_tokens").write.mode("overwrite")
+        .write.parquet(dir.resolve("qmeta").toString)
+      st.s2.select("doc_id").write.parquet(dir.resolve("s2ids").toString)
+      st.s3.select("doc_id").write.parquet(dir.resolve("s3ids").toString)
+      st.s4.select("doc_id", "lang", "n_tokens").write
         .parquet(dir.resolve("s4meta").toString)
       docs.filter(col("doc_id") < 5)
         .select(explode(graft.functions.GraftFunctions
           .ngramHashes(lower(col("text")), 5)).as("ngh"))
         .distinct()
-        .write.mode("overwrite")
-        .parquet(dir.resolve("benchgrams").toString)
+        .write.parquet(dir.resolve("benchgrams").toString)
       import graft.operators.IncrementalDedup
       IncrementalDedup.writeIndex(
         IncrementalDedup.signatures(st.s2, "doc_id", "text"),
@@ -1600,10 +1545,7 @@ object PipelineQueries {
       IncrementalDedup.writeBandedIndex(
         s.read.parquet(dir.resolve("sigindex").toString),
         dir.resolve("banded").toString)
-      Files.write(marker, fp.getBytes("UTF-8")) // commit point
     }
-    }
-    dir
   }
 
   def ensureCorpusRetractArtifacts(s: SparkSession, d: String): Unit = {
@@ -2312,23 +2254,10 @@ object PipelineQueries {
     * retraction DELTA itself stays blast-radius-sized. */
   private def corpusLifecycleArtifacts(s: SparkSession, d: String,
       c1: Long, c2: Long): java.nio.file.Path = {
-    import java.nio.file.{Files, Paths}
     import graft.operators.IncrementalDedup
-    val tag = new java.io.File(d).getCanonicalPath
-    val keySrc = s"corpus-lifecycle|$tag|c1=$c1|c2=$c2|mod17=7|v1"
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(keySrc.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val dir = Paths.get(graft.sources.Artifacts.cacheDir, key)
-    val marker = dir.resolve("_built")
     val docs = Tables.documents(s, d)
-    val fpRow = docs.agg(count(lit(1)),
-      bit_xor(xxhash64(col("doc_id")))).head()
-    val fp = s"${fpRow.getLong(0)}:${if (fpRow.isNullAt(1)) 0L
-      else fpRow.getLong(1)}"
-    val fresh = Files.exists(marker) &&
-      new String(Files.readAllBytes(marker), "UTF-8").trim == fp &&
-      !sys.env.get("GRAFT_INDEX_REBUILD").contains("1")
-    if (!fresh) {
+    Artifacts.buildOnce("corpus_lifecycle", s"c1=$c1|c2=$c2|mod17=7|v1",
+        d, docs, "doc_id") { dir =>
       graft.functions.GraftFunctions.register(s)
       val day12 = corpusDay3Artifacts(s, d, c1, c2)
       val qmeta = s.read.parquet(day12.resolve("qmeta12").toString)
@@ -2350,15 +2279,15 @@ object PipelineQueries {
       }
       // membership rewrites (all map-side vs broadcast delta sets)
       qmeta.join(probe(st.rIds), Seq("doc_id"), "left_anti")
-        .write.mode("overwrite").parquet(dir.resolve("qmeta").toString)
+        .write.parquet(dir.resolve("qmeta").toString)
       s.read.parquet(dir.resolve("qmeta").toString)
-        .select("digest").distinct().write.mode("overwrite")
+        .select("digest").distinct().write
         .parquet(dir.resolve("digests").toString)
       val affected = st.newcomers ++ st.doomedNow // fresh-verdict docs
       s3ids.join(probe(st.rIds ++ affected), Seq("doc_id"), "left_anti")
         .unionAll(probe(st.newcomers))
-        .write.mode("overwrite").parquet(dir.resolve("s3ids").toString)
-      st.s4keep.unionByName(st.s4new).write.mode("overwrite")
+        .write.parquet(dir.resolve("s3ids").toString)
+      st.s4keep.unionByName(st.s4new).write
         .parquet(dir.resolve("s4meta").toString)
       // index rewrite: drop retracted, add re-elected twins' sigs
       val bornSigs = IncrementalDedup.signatures(
@@ -2372,11 +2301,8 @@ object PipelineQueries {
       IncrementalDedup.writeBandedIndex(
         s.read.parquet(dir.resolve("sigs").toString),
         dir.resolve("banded").toString)
-      benchGrams.write.mode("overwrite")
-        .parquet(dir.resolve("benchgrams").toString)
-      Files.write(marker, fp.getBytes("UTF-8")) // commit point
+      benchGrams.write.parquet(dir.resolve("benchgrams").toString)
     }
-    dir
   }
 
   def ensureCorpusLifecycleArtifacts(s: SparkSession, d: String): Unit = {
@@ -4114,22 +4040,16 @@ object PipelineQueries {
     * Returns (basePath, summaryPath). */
   private def ensureMvArtifacts(s: SparkSession, d: String)
       : (String, String) = {
-    val dir = java.nio.file.Paths.get(graft.sources.Artifacts.cacheDir,
-      "mv_rewrite_" + java.security.MessageDigest.getInstance("MD5")
-        .digest(new java.io.File(d).getCanonicalPath.getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString.take(16))
-    val marker = dir.resolve("_built")
-    if (!java.nio.file.Files.exists(marker)) {
+    val dir = Artifacts.buildOnce("mv_rewrite", "returnflag,linestatus|v1",
+        d, Tables.lineitem(s, d), "l_orderkey", "l_linenumber") { dir =>
       Tables.lineitem(s, d)
         .select("l_returnflag", "l_linestatus", "l_quantity", "l_shipdate")
-        .write.mode("overwrite").parquet(dir.resolve("base").toString)
+        .write.parquet(dir.resolve("base").toString)
       s.read.parquet(dir.resolve("base").toString)
         .groupBy("l_returnflag", "l_linestatus")
         .agg(count(lit(1)).as("cnt"), sum("l_quantity").as("sum_qty"),
           min("l_shipdate").as("min_ship"), max("l_shipdate").as("max_ship"))
-        .write.mode("overwrite").parquet(dir.resolve("summary").toString)
-      java.nio.file.Files.createDirectories(dir)
-      java.nio.file.Files.write(marker, "ok".getBytes("UTF-8"))
+        .write.parquet(dir.resolve("summary").toString)
     }
     (dir.resolve("base").toString, dir.resolve("summary").toString)
   }

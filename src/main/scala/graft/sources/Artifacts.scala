@@ -1,9 +1,36 @@
 package graft.sources
 
-/** Shared on-disk artifact root for every build-once/read-many output
-  * (IVF-PQ indexes, partitioned/bucketed layouts): `GRAFT_INDEX_DIR` or
-  * `<tmp>/graft-index`. ONE definition — indexes and layouts must never
-  * silently land in different roots when the convention changes. */
+import java.nio.file.{FileSystemException, Files, Path, Paths,
+  StandardCopyOption}
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
+/** Build-once/read-many on-disk artifacts (IVF-PQ indexes, storage
+  * layouts, near-dup pair graphs, corpus state) under ONE root,
+  * `GRAFT_INDEX_DIR` or `<tmp>/graft-index`, built through ONE
+  * primitive, [[buildOnce]].
+  *
+  * An artifact's directory is named by everything its content is a
+  * deterministic function of: the artifact name, the canonical input
+  * path, the builder's recipe (every shape parameter plus a version
+  * token — bump it when the builder's code changes) and the input's id
+  * fingerprint (row count + order-independent xor of the id-column
+  * hash). A directory that exists is therefore complete and current by
+  * construction; there is no freshness marker to read or forget.
+  *
+  * Fingerprint caveat, by design: it covers the ID columns only —
+  * content rewritten in place under unchanged ids is not detected (the
+  * testdata generator never does that; point `GRAFT_INDEX_DIR` at a
+  * fresh directory after such a rewrite, a production metastore owns
+  * real table versioning).
+  *
+  * Superseded directories (an older recipe or fingerprint) are left in
+  * place: a lazy DataFrame from an earlier call may still be reading
+  * them, and deleting under it would fail or silently drop rows. The
+  * fixture tables never change, so running the gates creates none. A
+  * killed JVM likewise leaves its dot-prefixed staging dir, which
+  * nothing reads. */
 object Artifacts {
   def cacheDir: String =
     sys.env.getOrElse("GRAFT_INDEX_DIR",
@@ -12,15 +39,57 @@ object Artifacts {
   private val buildLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
-  /** Serializes a build-if-absent section per artifact key. The r17
-    * concurrency work (driver futures in the joint-CRUD gates,
-    * `runConcurrently`) made it possible for two driver threads to race
-    * the same check-marker-then-overwrite build — interleaved
-    * mode(overwrite) parquet writes to one directory can commit BOTH
-    * jobs' part files with the `_built` marker still written, persisting
-    * silent duplication into every later run. All build concurrency is
-    * driver-thread-local to one JVM, so a JVM lock per key suffices;
-    * callers must RE-CHECK freshness inside the lock. */
-  def withBuildLock[T](key: String)(body: => T): T =
-    buildLocks.computeIfAbsent(key, _ => new Object).synchronized(body)
+  /** The committed directory for (`name`, `input`, `recipe`, the
+    * fingerprint of `rows` over `idCols`), running `write` into a
+    * staging sibling first if it does not exist yet. `input` is the
+    * input's path (canonicalized here) or, for inputs with no path, a
+    * caller identity string; `name` must be a plain identifier (the
+    * bucketed layout uses the directory name as its table name).
+    *
+    * Build: under a per-key JVM lock (every build concurrency is
+    * driver threads of one JVM), `write` fills a fresh staging dir and
+    * one atomic rename commits it — a build that throws or is killed
+    * leaves no committed artifact, and the staging dir is removed on a
+    * throw. Two threads asking for one key run `write` once. Another
+    * JVM that commits the same key first wins; this build is dropped
+    * (both are the same deterministic function of the key). */
+  def buildOnce(name: String, recipe: String, input: String,
+      rows: DataFrame, idCols: String*)(write: Path => Unit): Path =
+    buildOnceIn(cacheDir, name, recipe, input, rows, idCols: _*)(write)
+
+  /** [[buildOnce]] under an explicit root instead of [[cacheDir]] (the
+    * IVF-PQ builder takes its root as an argument). */
+  def buildOnceIn(root: String, name: String, recipe: String,
+      input: String, rows: DataFrame, idCols: String*)
+      (write: Path => Unit): Path = {
+    val fp = rows.agg(count(lit(1)),
+      bit_xor(xxhash64(idCols.map(col): _*))).head()
+    val keySrc = Seq(name, new java.io.File(input).getCanonicalPath,
+      recipe, idCols.mkString(","), fp.getLong(0),
+      if (fp.isNullAt(1)) 0L else fp.getLong(1)).mkString("|")
+    val key = java.security.MessageDigest.getInstance("MD5")
+      .digest(keySrc.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    val dir = Paths.get(root, s"${name}_$key")
+    buildLocks.computeIfAbsent(dir.toString, _ => new Object).synchronized {
+      if (!Files.isDirectory(dir)) {
+        val stage = Paths.get(root,
+          s".${name}_$key.${java.util.UUID.randomUUID}")
+        Files.createDirectories(stage)
+        try {
+          write(stage)
+          try Files.move(stage, dir, StandardCopyOption.ATOMIC_MOVE)
+          catch { case _: FileSystemException if Files.isDirectory(dir) => }
+        } finally deleteTree(stage)
+      }
+    }
+    dir
+  }
+
+  private def deleteTree(p: Path): Unit =
+    if (Files.exists(p)) {
+      val walk = Files.walk(p)
+      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
+        .forEach(f => Files.delete(f))
+      finally walk.close()
+    }
 }

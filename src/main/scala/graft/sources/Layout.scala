@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -25,102 +23,68 @@ import org.apache.spark.sql.functions._
   *    network cost every time). LayoutSpec asserts the bucketed
   *    sort-merge join has NO shuffle exchange on either input.
   *
-  * Both layouts are one-time artifacts cached like
-  * [[graft.operators.IvfPq.buildOrLoad]]: keyed by source path, with a
-  * source-fingerprint (row count + id-hash xor) marker so a regenerated
-  * source table triggers a rebuild rather than silently serving a stale
-  * layout; a fresh JVM re-REGISTERS existing bucketed files in its
-  * catalog instead of rewriting them. Same single-host caveat as
-  * IvfPq.buildOrLoad: concurrent writers race the overwrite; production
-  * deployments own these artifacts in a real metastore.
+  * Both layouts are one-time artifacts built through
+  * [[Artifacts.buildOnce]]: keyed by source path, recipe and
+  * source-fingerprint (row count + id-hash xor), so a regenerated source
+  * table builds a new layout rather than silently serving a stale one;
+  * a fresh JVM re-REGISTERS the committed bucketed files in its catalog
+  * instead of rewriting them. Production deployments own these
+  * artifacts in a real metastore.
   */
 object Layout {
-
-  private def keyOf(parts: String*): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(parts.mkString("|").getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-
-  /** count + order-independent id-hash xor — the IvfPq.buildOrLoad
-    * fingerprint recipe (bit_xor cannot overflow under ANSI). Caveat,
-    * by design: the fingerprint covers the ID COLUMN only — content
-    * changes under unchanged ids do not trigger a rebuild (the testdata
-    * generator never does that; a production metastore would own real
-    * table versioning). */
-  private def fingerprint(df: DataFrame, idCol: String): String = {
-    val r = df.agg(count(lit(1)), bit_xor(xxhash64(col(idCol)))).head()
-    s"${r.getLong(0)}:${if (r.isNullAt(1)) 0L else r.getLong(1)}"
-  }
-
-  private def isFresh(marker: java.nio.file.Path, fp: String): Boolean =
-    Files.exists(marker) &&
-      new String(Files.readAllBytes(marker), "UTF-8").trim == fp &&
-      !sys.env.get("GRAFT_INDEX_REBUILD").contains("1")
 
   /** Events re-laid-out as parquet partitioned by `event_date`
     * (`to_date(ts)` in the session's UTC). Returns the partitioned
     * read — date filters on it prune at file listing. */
   def partitionedEvents(s: SparkSession, d: String): DataFrame = {
-    val dir = Paths.get(Artifacts.cacheDir,
-      "events_by_date_" + keyOf(new java.io.File(d).getCanonicalPath))
-    val marker = dir.resolve("_built")
-    val fp = fingerprint(Tables.events(s, d), "event_id")
-    if (!isFresh(marker, fp)) {
+    val dir = Artifacts.buildOnce("events_by_date", "v1", d,
+        Tables.events(s, d), "event_id") { dir =>
       Tables.events(s, d)
         .withColumn("event_date", to_date(col("ts")))
-        .write.mode("overwrite").partitionBy("event_date")
+        .write.partitionBy("event_date")
         .parquet(dir.resolve("data").toString)
-      Files.createDirectories(dir)
-      Files.write(marker, fp.getBytes("UTF-8")) // commit point
     }
     s.read.parquet(dir.resolve("data").toString)
   }
 
   /** Orders and customer saved as tables bucketed by the join key
     * (`o_custkey` / `c_custkey`, same bucket count), then joined —
-    * planned WITHOUT a shuffle on either side. Table names carry the
-    * source-path key so different SF dirs coexist in one warehouse.
-    * Files are written once (fingerprint-markered); a fresh JVM, whose
-    * in-memory catalog forgot the tables, re-registers the existing
-    * files with the same bucket spec instead of rewriting them. */
+    * planned WITHOUT a shuffle on either side. Files are written once
+    * through [[Artifacts.buildOnce]] and always registered from the
+    * committed directory; the table name IS the artifact directory
+    * name, so different SF dirs coexist in one warehouse and a new
+    * source fingerprint never reuses a stale catalog entry. A fresh
+    * JVM, whose in-memory catalog forgot the tables, re-registers the
+    * existing files with the same bucket spec instead of rewriting
+    * them (bucket ids live in the file names Spark wrote). */
   def bucketedOrdersWithCustomers(s: SparkSession, d: String,
       buckets: Int = 8): DataFrame = {
-    val key = keyOf(new java.io.File(d).getCanonicalPath, buckets.toString)
-
-    def ensure(tbl: String, df: DataFrame, idCol: String,
-        bucketCol: String): Unit = {
-      val path = Paths.get(Artifacts.cacheDir, tbl)
-      val marker = path.resolve("_built")
-      val fp = fingerprint(df, idCol)
-      // a registered table must STILL pass the fingerprint check — a
-      // source regenerated within this JVM's lifetime would otherwise
-      // silently serve the stale bucketed layout (r4 advice)
-      if (s.catalog.tableExists(tbl)) {
-        if (isFresh(marker, fp)) return
-        s.sql(s"DROP TABLE $tbl")
+    def ensure(name: String, df: DataFrame, idCol: String,
+        bucketCol: String): String = {
+      val bucketSpec = s"CLUSTERED BY ($bucketCol) SORTED BY " +
+        s"($bucketCol) INTO $buckets BUCKETS"
+      val path = Artifacts.buildOnce(name, s"$bucketSpec|v1", d, df,
+          idCol) { dir =>
+        // bucketBy writes only through saveAsTable: stage under a
+        // throwaway external table, whose DROP keeps the files
+        val tmp = "graft_stage_" + java.util.UUID.randomUUID.toString
+          .replace("-", "")
+        try df.write.bucketBy(buckets, bucketCol).sortBy(bucketCol)
+          .option("path", dir.toString).saveAsTable(tmp)
+        finally s.sql(s"DROP TABLE IF EXISTS $tmp")
       }
-      if (isFresh(marker, fp)) {
-        // files already laid out by a prior JVM: register, don't rewrite
-        // (bucket ids live in the file names Spark wrote)
-        val schema = df.schema.toDDL
-        s.sql(s"""CREATE TABLE $tbl ($schema) USING PARQUET
-                  CLUSTERED BY ($bucketCol) SORTED BY ($bucketCol)
-                  INTO $buckets BUCKETS LOCATION '$path'""")
-      } else {
-        df.write.bucketBy(buckets, bucketCol).sortBy(bucketCol)
-          .option("path", path.toString)
-          .mode("overwrite").saveAsTable(tbl)
-        Files.write(marker, fp.getBytes("UTF-8")) // commit point
-      }
+      val tbl = path.getFileName.toString
+      s.sql(s"""CREATE TABLE IF NOT EXISTS $tbl (${df.schema.toDDL})
+                USING PARQUET $bucketSpec LOCATION '$path'""")
+      tbl
     }
 
-    ensure(s"graft_orders_b_$key", Tables.orders(s, d),
+    val orders = ensure("graft_orders_b", Tables.orders(s, d),
       "o_orderkey", "o_custkey")
-    ensure(s"graft_customer_b_$key", Tables.customer(s, d),
+    val customer = ensure("graft_customer_b", Tables.customer(s, d),
       "c_custkey", "c_custkey")
-    s.table(s"graft_orders_b_$key")
-      .join(s.table(s"graft_customer_b_$key"),
-        col("o_custkey") === col("c_custkey"))
+    s.table(orders).join(s.table(customer),
+      col("o_custkey") === col("c_custkey"))
   }
 
   // ---- zone maps: min/max file skipping on a NON-partition column ----
@@ -134,28 +98,23 @@ object Layout {
     * for multi-column predicates). `repartitionByRange` + an in-file
     * sort make each file's [min, max] tight and disjoint, so a
     * user-range query touches ~range/width files instead of all of
-    * them. Artifact-cached with the fingerprint-marker protocol. */
+    * them. Built once through [[Artifacts.buildOnce]]. */
   def clusteredEventsDir(s: SparkSession, d: String,
       files: Int = 16): String = {
-    val dir = Paths.get(Artifacts.cacheDir,
-      "events_by_user_" + keyOf(new java.io.File(d).getCanonicalPath,
-        files.toString))
-    val marker = dir.resolve("_built")
-    val fp = fingerprint(Tables.events(s, d), "event_id")
-    if (!isFresh(marker, fp)) {
+    val dir = Artifacts.buildOnce("events_by_user", s"files=$files|v1", d,
+        Tables.events(s, d), "event_id") { dir =>
       Tables.events(s, d)
         .repartitionByRange(files, col("user_id"))
         .sortWithinPartitions("user_id")
-        .write.mode("overwrite").parquet(dir.resolve("data").toString)
+        .write.parquet(dir.resolve("data").toString)
       // the zone map itself: one tiny stats table, computed once at
       // write time (a production table format keeps these in manifest
       // metadata; parquet footers hold the same stats per file)
       s.read.parquet(dir.resolve("data").toString)
-        .groupBy(input_file_name().as("file"))
+        .groupBy(dataFileName.as("file"))
         .agg(min("user_id").as("mn"), max("user_id").as("mx"))
         .coalesce(1)
-        .write.mode("overwrite").parquet(dir.resolve("zonemap").toString)
-      Files.write(marker, fp.getBytes("UTF-8")) // commit point
+        .write.parquet(dir.resolve("zonemap").toString)
     }
     dir.toString
   }
@@ -172,6 +131,12 @@ object Layout {
     * which is what Iceberg/Delta do for exactly this reason). */
   private[graft] val maxPlannedFiles: Int = 100000
 
+  /** A sidecar row's file, relative to the artifact's `data` dir: the
+    * build runs in a staging dir that the commit renames, so absolute
+    * paths written at build time would not resolve afterwards. */
+  private def dataFileName = substring_index(input_file_name(), "/", -1)
+
+  /** The scan of `keep` (file names relative to `dataDir`). */
   private[graft] def plannedScan(s: SparkSession, dataDir: String,
       keep: Array[String], what: String): DataFrame = {
     if (keep.length > maxPlannedFiles)
@@ -182,7 +147,7 @@ object Layout {
           "scan with the residual filter, or keep file skipping in " +
           "a table-format manifest at this file count")
     if (keep.isEmpty) s.read.parquet(dataDir).filter(lit(false))
-    else s.read.parquet(keep.toIndexedSeq: _*)
+    else s.read.parquet(keep.map(f => s"$dataDir/$f").toIndexedSeq: _*)
   }
 
   /** Events with `user_id` in [lo, hi], read ONLY from files whose zone
@@ -216,22 +181,18 @@ object Layout {
   def bloomIndexedEventsDir(s: SparkSession, d: String,
       files: Int = 16): String = {
     graft.functions.GraftFunctions.register(s)
-    val dir = Paths.get(Artifacts.cacheDir,
-      "events_bloomidx_" + keyOf(new java.io.File(d).getCanonicalPath,
-        files.toString, bloomBits.toString, bloomK.toString))
-    val marker = dir.resolve("_built")
-    val fp = fingerprint(Tables.events(s, d), "event_id")
-    if (!isFresh(marker, fp)) {
+    val dir = Artifacts.buildOnce("events_bloomidx",
+        s"files=$files|bits=$bloomBits|k=$bloomK|v1", d,
+        Tables.events(s, d), "event_id") { dir =>
       Tables.events(s, d)
         .repartition(files, col("event_id"))
-        .write.mode("overwrite").parquet(dir.resolve("data").toString)
+        .write.parquet(dir.resolve("data").toString)
       s.read.parquet(dir.resolve("data").toString)
-        .groupBy(input_file_name().as("file"))
+        .groupBy(dataFileName.as("file"))
         .agg(graft.functions.GraftFunctions
           .bloomAgg(col("event_id"), bloomBits, bloomK).as("bf"))
         .coalesce(1)
-        .write.mode("overwrite").parquet(dir.resolve("bloom").toString)
-      Files.write(marker, fp.getBytes("UTF-8")) // commit point
+        .write.parquet(dir.resolve("bloom").toString)
     }
     dir.toString
   }

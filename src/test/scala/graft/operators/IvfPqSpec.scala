@@ -49,25 +49,30 @@ class IvfPqSpec extends SparkSpec {
 
   test("buildOrLoad: builds once, loads thereafter, artifact answers match") {
     import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
     val tmp = Files.createTempDirectory("ivfpq-cache").toString
     val i1 = IvfPq.buildOrLoad(emb, tmp, tag = "spec-corpus")
     val fromArtifact = topkSet(IvfPq.search(i1, probes, k = 10))
     // the artifact must answer identically to the in-memory build
     assert(fromArtifact == topkSet(IvfPq.search(index, probes, k = 10)),
       "persisted index diverges from in-memory build")
-    val marker = Files.list(Paths.get(tmp)).iterator().next()
-      .resolve("_built")
-    assert(Files.exists(marker))
-    val t1 = Files.getLastModifiedTime(marker)
+    def artifacts() = {
+      val ls = Files.list(Paths.get(tmp))
+      try ls.iterator().asScala.toList finally ls.close()
+    }
+    val Seq(dir) = artifacts()
+    val t1 = Files.getLastModifiedTime(dir.resolve("codes"))
     val i2 = IvfPq.buildOrLoad(emb, tmp, tag = "spec-corpus")
     assert(topkSet(IvfPq.search(i2, probes, k = 10)) == fromArtifact)
-    assert(Files.getLastModifiedTime(marker) == t1,
+    assert(artifacts() == Seq(dir) &&
+      Files.getLastModifiedTime(dir.resolve("codes")) == t1,
       "second buildOrLoad must load, not rebuild")
-    // a corpus-count mismatch invalidates the artifact => rebuild
-    Files.write(marker, "0".getBytes("UTF-8"))
-    IvfPq.buildOrLoad(emb, tmp, tag = "spec-corpus")
-    assert(new String(Files.readAllBytes(marker), "UTF-8").trim != "0",
-      "stale fingerprint must trigger a rebuild")
+    // a corpus whose id set changed invalidates the artifact => rebuild
+    val shrunk = emb.filter(col("vec_id") =!= 0L)
+    val i3 = IvfPq.buildOrLoad(shrunk, tmp, tag = "spec-corpus")
+    assert(artifacts().size == 2, "stale fingerprint must trigger a rebuild")
+    assert(i3.codes.count() == shrunk.count(),
+      "the rebuilt index must cover the changed corpus")
   }
 
   test("append: frozen-index ingest finds new vectors immediately") {

@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.SortMergeJoinExec
@@ -73,13 +74,14 @@ class LayoutSpec extends SparkSpec {
       .filter(n => n.startsWith("graft_orders_b_")
         || n.startsWith("graft_customer_b_"))
     assert(tbls.size == 2)
-    def mtimes = tbls.map(t =>
-      new java.io.File(Artifacts.cacheDir, t).listFiles()
-        .filter(_.getName.endsWith(".parquet"))
-        .map(f => f.getName -> f.lastModified).sortBy(_._1).toSeq).toSeq
+    val locations = tbls.map(t => new java.io.File(spark.sessionState
+      .catalog.getTableMetadata(TableIdentifier(t)).location))
+    def mtimes = locations.map(_.listFiles()
+      .filter(_.getName.endsWith(".parquet"))
+      .map(f => f.getName -> f.lastModified).sortBy(_._1).toSeq).toSeq
     val before = mtimes
     // simulate a fresh JVM: the in-memory catalog forgets the tables,
-    // the files and the fingerprint marker survive
+    // the committed artifact files survive
     tbls.foreach(t => spark.sql(s"DROP TABLE $t"))
     val priorBroadcast =
       spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
